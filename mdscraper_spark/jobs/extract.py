@@ -192,14 +192,7 @@ def main(argv=None) -> None:
     job = KgBuildJob(spark, args.warehouse, config, n_buckets=args.n_buckets,
                      salt=args.salt if args.salt is not None else "auto")
     if args.extract_only:
-        from mdscraper_spark.operators.extract_udfs import (extract_markdown,
-                                                            with_doc_path)
-        from mdscraper_spark.sources.pages import with_part_id
-
-        docs = with_part_id(with_doc_path(extract_markdown(pages, config),
-                                          config), args.n_buckets)
-        job.wh.write_table(docs.repartition(args.n_buckets, "part_id"),
-                           "markdown_docs", partition_by=("part_id",))
+        job.extract(pages, run_id=run_id, resume=args.resume)
     else:
         job.run(pages, run_id=run_id, resume=args.resume)
 

@@ -17,13 +17,17 @@ re-running a bucket is idempotent.  Downstream stages are recomputed
 from the (then complete) markdown_docs table — they are global
 (connected components cross every partition boundary) and cheap
 relative to extraction.
+
+Every stage commits through ``KgBuildJob._stage``; a lineage row's
+``n_rows`` is the row count the stage's write committed (the snapshot
+manifest's ``added_rows``), never a re-scan of the table.
 """
 
 from __future__ import annotations
 
 import datetime
 import time
-from typing import Optional
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,63 +91,75 @@ class KgBuildJob:
         return tuple((r.alias, r.etype) for r in rows)
 
     # -- lineage -----------------------------------------------------------
-    def _append_lineage(self, rows: list) -> None:
-        df = self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    def _append_lineage(self, run_id: str, stage: str, rows: list) -> None:
+        """Append one lineage row per (part_id, n_rows, wall_ms)."""
+        now = datetime.datetime.now()
+        df = self.spark.createDataFrame(
+            [(run_id, int(pid), stage, "ok", int(n), wall_ms, now)
+             for pid, n, wall_ms in rows], LINEAGE_SCHEMA)
         df.write.mode("append").parquet(str(self.wh.table_path("lineage")))
 
-    def _lineage(self) -> Optional[DataFrame]:
-        path = self.wh.table_path("lineage")
-        if not path.exists():
-            return None
-        return self.spark.read.parquet(str(path))
+    def _stage(self, run_id: str, stage: str, build: Callable[[], dict],
+               partition_by: Sequence[str] = ("part_id",)) -> dict:
+        """Run one lineage-recorded stage.
 
-    def _record_stage(self, run_id: str, stage: str, per_part_counts: list,
-                      wall_ms: int) -> None:
-        now = datetime.datetime.now()
-        self._append_lineage([
-            (run_id, int(pid), stage, "ok", int(n), wall_ms, now)
-            for pid, n in per_part_counts
-        ])
+        ``build()`` returns ``{table: df}`` in write order; each table is
+        written and read back.  The first table's commit gives the
+        stage's lineage: one row per written bucket (``part_id`` from the
+        partition key) or, for a global stage, one ``GLOBAL_PART`` row.
+        ``n_rows`` is the row count that write committed, read from the
+        snapshot manifest, so no table is scanned to count it; every row
+        carries the stage wall.  Returns the tables read back."""
+        t0 = time.monotonic()
+        tables = {}
+        for name, df in build().items():
+            # looked up per call: tracing wraps Warehouse.write_table
+            self.wh.write_table(df, name, partition_by=partition_by)
+            tables[name] = self.wh.read_table(name)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        added = self.wh.manifest(next(iter(tables)))["added_rows"]
+        if partition_by:
+            rows = [(key.partition("=")[2], n, wall_ms)
+                    for key, n in added.items()]
+        else:
+            rows = [(GLOBAL_PART, sum(added.values()), wall_ms)]
+        self._append_lineage(run_id, stage, rows)
+        return tables
 
     # -- stages -------------------------------------------------------------
-    def run(self, pages: DataFrame, run_id: str = "run-1",
-            resume: bool = False) -> dict:
-        pages = with_part_id(pages, self.n_buckets)
-
-        todo = pages
+    def extract(self, pages: DataFrame, run_id: str = "run-1",
+                resume: bool = False) -> DataFrame:
+        """Extract stage alone: pages -> markdown_docs, one lineage row
+        per written bucket.  With ``resume``, buckets that already have
+        an ok extract row are skipped, and nothing is committed when no
+        bucket is left.  Returns the markdown_docs table."""
+        todo = with_part_id(pages, self.n_buckets)
         if resume:
-            lineage = self._lineage()
-            if lineage is not None:
-                done = (lineage
+            lineage = self.wh.table_path("lineage")
+            if lineage.exists():
+                done = (self.spark.read.parquet(str(lineage))
                         .filter((F.col("stage") == "extract")
                                 & (F.col("status") == "ok"))
                         .select("part_id").distinct())
-                todo = pages.join(done, "part_id", "left_anti")
+                todo = todo.join(done, "part_id", "left_anti")
+            if todo.limit(1).count() == 0:
+                return self.wh.read_table("markdown_docs")
 
-        t0 = time.monotonic()
-        n_todo = todo.limit(1).count()
-        if n_todo > 0:
+        def build() -> dict:
             docs = with_doc_path(extract_markdown(todo, self.config),
                                  self.config)
-            docs = with_part_id(docs, self.n_buckets)
             # co-locate each bucket into one task before the partitioned
             # write: one output file per (bucket, write) instead of
             # n_tasks x n_buckets small files
-            docs = docs.repartition(self.n_buckets, "part_id")
-            self.wh.write_table(docs, "markdown_docs",
-                                partition_by=("part_id",))
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            counts = [(r.part_id, r.n) for r in
-                      self.wh.read_table("markdown_docs")
-                      .join(todo.select("part_id").distinct(), "part_id",
-                            "left_semi")
-                      .groupBy("part_id").agg(F.count("*").alias("n"))
-                      .collect()]
-            self._record_stage(run_id, "extract", counts, wall_ms)
+            return {"markdown_docs": with_part_id(docs, self.n_buckets)
+                    .repartition(self.n_buckets, "part_id")}
 
-        docs = self.wh.read_table("markdown_docs")
+        return self._stage(run_id, "extract", build)["markdown_docs"]
 
-        # downstream stages, each lineage-recorded with per-bucket counts.
+    def run(self, pages: DataFrame, run_id: str = "run-1",
+            resume: bool = False) -> dict:
+        docs = self.extract(pages, run_id, resume)
+
         # The mining gazetteer comes from the SAME aliases the linking
         # stage uses — a caller-injected dictionary must drive mention
         # detection too, or custom aliases silently produce an empty KG.
@@ -151,77 +167,55 @@ class KgBuildJob:
         # keeping the byte-pinned fixture behavior; injected dicts are
         # collected in a deterministic order — the dictionary is the
         # bounded broadcast side, so the collect is small by contract.)
-        gaz_entries = self._gazetteer_entries()
-
-        def per_part(df: DataFrame) -> list:
-            keyed = with_part_id(df, self.n_buckets)
-            return [(r.part_id, r.n) for r in
-                    keyed.groupBy("part_id").agg(F.count("*").alias("n"))
-                    .collect()]
-
-        t0 = time.monotonic()
-        mined = kg_ops.mine_kg_combined(docs, gaz_entries).persist()
+        mined = kg_ops.mine_kg_combined(
+            docs, self._gazetteer_entries()).persist()
         mentions, triples = kg_ops.split_mined(mined)
-        self.wh.write_table(with_part_id(mentions, self.n_buckets),
-                            "mentions", partition_by=("part_id",))
-        self.wh.write_table(with_part_id(triples, self.n_buckets),
-                            "triples", partition_by=("part_id",))
+        mine = self._stage(run_id, "mine", lambda: {
+            "mentions": with_part_id(mentions, self.n_buckets),
+            "triples": with_part_id(triples, self.n_buckets)})
         mined.unpersist()
-        mentions = self.wh.read_table("mentions")
-        triples = self.wh.read_table("triples")
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._record_stage(run_id, "mine", per_part(mentions.select("url")),
-                           wall_ms)
+        mentions, triples = mine["mentions"], mine["triples"]
 
-        t0 = time.monotonic()
-        links = kg_ops.link_entities(mentions, self.aliases, salt=self.salt)
-        self.wh.write_table(with_part_id(links, self.n_buckets),
-                            "entity_links", partition_by=("part_id",))
-        links = self.wh.read_table("entity_links")
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._record_stage(run_id, "link", per_part(links.select("url")),
-                           wall_ms)
+        links = self._stage(run_id, "link", lambda: {
+            "entity_links": with_part_id(
+                kg_ops.link_entities(mentions, self.aliases, salt=self.salt),
+                self.n_buckets)})["entity_links"]
 
-        t0 = time.monotonic()
-        # CC convergence telemetry (round-4 verdict item 8): every
-        # distributed label-propagation round lands in lineage as
-        # stage='cc_round' with part_id = round index and
-        # n_rows = changed-label count, so a production
-        # non-convergence is diagnosable from the trajectory (flat
-        # n_rows => a deep component, shrinking => raise max_iter).
-        # The driver-sized local union-find path has no rounds and
-        # records nothing.
-        cc_rounds: list = []
-        t_round = [time.monotonic()]
+        def graph() -> dict:
+            # CC convergence telemetry: every distributed
+            # label-propagation round lands in lineage as
+            # stage='cc_round' with part_id = round index and
+            # n_rows = changed-label count, so a production
+            # non-convergence is diagnosable from the trajectory (flat
+            # n_rows => a deep component, shrinking => raise max_iter).
+            # Each row carries its own round's wall, not the stage's:
+            # the trajectory shows WHICH rounds were slow.  The
+            # driver-sized local union-find path has no rounds and
+            # records nothing.
+            rounds: list = []
+            last = time.monotonic()
 
-        def record_cc_round(round_idx: int, n_changed: int,
-                            n_nodes: int) -> None:
-            # per-ROUND wall, not the cumulative stage wall: the whole
-            # point of the trajectory is seeing WHICH rounds were slow
-            now_s = time.monotonic()
-            cc_rounds.append(
-                (round_idx, n_changed, int((now_s - t_round[0]) * 1000)))
-            t_round[0] = now_s
+            def record_cc_round(round_idx: int, n_changed: int,
+                                _n_nodes: int) -> None:
+                nonlocal last
+                now = time.monotonic()
+                rounds.append((round_idx, n_changed,
+                               int((now - last) * 1000)))
+                last = now
 
-        cmap = kg_ops.connected_components(
-            kg_ops.coreference_edges(links),
-            local_solve_threshold=self.cc_local_solve_threshold,
-            on_round=record_cc_round)
-        if cc_rounds:
-            now = datetime.datetime.now()
-            self._append_lineage([
-                (run_id, int(rnd), "cc_round", "ok", int(n_changed),
-                 wall_round, now)
-                for rnd, n_changed, wall_round in cc_rounds])
-        self.wh.write_table(cmap, "canonical_map")
-        cmap = self.wh.read_table("canonical_map")
-        nodes = kg_ops.build_kg_nodes(cmap, mentions, self.aliases)
-        edges = kg_ops.build_kg_edges(triples, cmap)
-        self.wh.write_table(nodes, "kg_nodes")
-        self.wh.write_table(edges, "kg_edges")
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        n_nodes = self.wh.read_table("kg_nodes").count()
-        self._record_stage(run_id, "graph", [(GLOBAL_PART, n_nodes)], wall_ms)
+            cmap = kg_ops.connected_components(
+                kg_ops.coreference_edges(links),
+                local_solve_threshold=self.cc_local_solve_threshold,
+                on_round=record_cc_round)
+            if rounds:
+                self._append_lineage(run_id, "cc_round", rounds)
+            self.wh.write_table(cmap, "canonical_map")
+            cmap = self.wh.read_table("canonical_map")
+            return {"kg_nodes": kg_ops.build_kg_nodes(cmap, mentions,
+                                                      self.aliases),
+                    "kg_edges": kg_ops.build_kg_edges(triples, cmap)}
+
+        self._stage(run_id, "graph", graph, partition_by=())
 
         return {name: self.wh.read_table(name) for name in (
             "markdown_docs", "mentions", "triples", "entity_links",

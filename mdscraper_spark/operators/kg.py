@@ -658,21 +658,7 @@ def build_kg_edges_from_support(support: DataFrame,
     accumulated support instead of re-counting rows.  Identical output
     to build_kg_edges over the union of the batches' triples (support
     counting is associative)."""
-    cmap = _maybe_broadcast(canonical_map)
-    subj_node = F.concat(F.lit("s:"), _norm_col(F.col("subj")))
-    obj_node = F.concat(F.lit("s:"), _norm_col(F.col("obj")))
-    t = (support
-         .withColumn("subj_node", subj_node)
-         .withColumn("obj_node", obj_node))
-    t = (t.join(cmap.withColumnRenamed("node_id", "subj_node")
-                .withColumnRenamed("canon_id", "src_canon"), "subj_node", "left")
-         .join(cmap.withColumnRenamed("node_id", "obj_node")
-               .withColumnRenamed("canon_id", "dst_canon"), "obj_node", "left"))
-    return (t.select(
-                F.coalesce("src_canon", "subj_node").alias("src"),
-                F.col("pred"),
-                F.coalesce("dst_canon", "obj_node").alias("dst"),
-                F.col("n_support"))
+    return (_canonicalized_triples(support, canonical_map)
             .groupBy("src", "pred", "dst")
             .agg(F.sum("n_support").alias("n_support")))
 

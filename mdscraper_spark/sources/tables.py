@@ -43,6 +43,7 @@ import shutil
 import uuid
 from typing import Dict, List, Optional, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -88,6 +89,10 @@ class Warehouse:
         lets a writer make application metadata (e.g. a streaming
         batch id) atomic with the data commit.
 
+        The manifest's ``added_rows`` maps each partition key this
+        write committed (``""`` for an unpartitioned table) to its row
+        count, read from the new files' parquet footers.
+
         ``bucket_by=(n, col)`` writes the snapshot's files hash-bucketed
         on ``col`` (Spark bucketBy file layout — the Iceberg
         ``bucket(n, col)`` analog), so ``read_bucketed_parts`` can hand
@@ -128,14 +133,15 @@ class Warehouse:
             writer.parquet(str(data_dir))
 
         # discover the partition keys this snapshot wrote (leaf dirs
-        # with data files, relative to the snapshot dir)
-        written: List[str] = []
-        if partition_by:
-            for leaf in sorted({p.parent.relative_to(data_dir).as_posix()
-                                for p in data_dir.rglob("*.parquet")}):
-                written.append(leaf)
-        elif any(data_dir.rglob("*.parquet")):
-            written.append("")
+        # with data files, relative to the snapshot dir) and the rows
+        # each received, from the parquet footers — the adapter's
+        # analog of Iceberg's per-data-file record_count
+        added_rows: Dict[str, int] = {}
+        for f in sorted(data_dir.rglob("*.parquet")):
+            key = (f.parent.relative_to(data_dir).as_posix()
+                   if partition_by else "")
+            added_rows[key] = (added_rows.get(key, 0)
+                               + pq.read_metadata(f).num_rows)
 
         parent = parent_m
         partitions: Dict[str, List[str]] = {}
@@ -144,12 +150,12 @@ class Warehouse:
             partitions = {k: list(v) for k, v in
                           parent.get("partitions", {}).items()}
         if mode == "append":
-            for key in written:
+            for key in added_rows:
                 partitions.setdefault(key, []).append(snapshot_id)
         else:
             if not partition_by:
                 partitions = {}
-            for key in written:
+            for key in added_rows:
                 partitions[key] = [snapshot_id]
 
         manifest = {
@@ -162,6 +168,7 @@ class Warehouse:
             "partition_by": list(partition_by),
             "write_mode": mode,
             "partitions": partitions,
+            "added_rows": added_rows,
             "properties": dict(properties or {}),
             "bucket_by": list(bucket_by) if bucket_by is not None else None,
         }

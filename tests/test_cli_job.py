@@ -138,6 +138,29 @@ def test_site_mode_end_to_end(spark, tmp_path):
                                           "https://site.test/p2.html"}
 
 
+def test_extract_only_resume_skips_done_buckets(spark, tmp_path):
+    """--extract-only runs the job's extract stage: it writes lineage,
+    and a --resume re-run commits no new markdown_docs snapshot."""
+    from mdscraper_spark.jobs.extract import main
+    from mdscraper_spark.sources.tables import Warehouse
+
+    pq = _pages_parquet(spark, tmp_path)
+    wh_path = str(tmp_path / "wh_resume")
+    argv = ["--input", pq, "--warehouse", wh_path, "--extract-only",
+            "--resume", "--n-buckets", "4"]
+    main(argv + ["--run-id", "r1"])
+    wh = Warehouse(spark, wh_path)
+    before = wh.manifest("markdown_docs")["snapshot_id"]
+    main(argv + ["--run-id", "r2"])
+    assert wh.manifest("markdown_docs")["snapshot_id"] == before
+
+    extract_rows = (spark.read.parquet(str(wh.table_path("lineage")))
+                    .filter("stage = 'extract'").collect())
+    assert {r.run_id for r in extract_rows} == {"r1"}
+    assert sum(r.n_rows for r in extract_rows) == \
+        wh.read_table("markdown_docs").count()
+
+
 def test_site_mode_missing_seed_fails_loudly(spark, tmp_path):
     """A typo'd seed url must not complete as a silent empty run."""
     import pytest

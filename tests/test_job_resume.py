@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mdscraper_spark.config import ExtractConfig
-from mdscraper_spark.jobs.kg_build import KgBuildJob
+from mdscraper_spark.jobs.kg_build import GLOBAL_PART, KgBuildJob
 from mdscraper_spark.sources.pages import bulk_pages_df
 
 N_PAGES = 30
@@ -97,6 +97,21 @@ def test_lineage_metrics_recorded(spark, tmp_path):
                      .agg(F.sum("n_rows")).collect()[0][0])
     assert extract_total == N_PAGES
     assert all(r.wall_ms >= 0 for r in lineage.collect())
+
+    # every n_rows is the row count of the table its stage wrote
+    def lineage_counts(stage):
+        return {r.part_id: r.n_rows for r in
+                lineage.filter(F.col("stage") == stage).collect()}
+
+    def table_counts(name):
+        return {r.part_id: r["count"] for r in
+                tables[name].groupBy("part_id").count().collect()}
+
+    assert lineage_counts("extract") == table_counts("markdown_docs")
+    assert lineage_counts("mine") == table_counts("mentions")
+    assert lineage_counts("link") == table_counts("entity_links")
+    assert lineage_counts("graph") == \
+        {GLOBAL_PART: tables["kg_nodes"].count()}
 
 
 def test_empty_corpus_flows_through_all_stages(spark, tmp_path):

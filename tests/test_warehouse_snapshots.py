@@ -28,6 +28,9 @@ def test_time_travel_full_overwrite(spark, wh):
     assert grab(wh.read_table("t")) == [(0, "c", 3)]
     assert grab(wh.read_table("t", snapshot_id=s1)) == [(0, "a", 1), (1, "b", 2)]
     assert grab(wh.read_table("t", snapshot_id=s2)) == [(0, "c", 3)]
+    # an unpartitioned write commits its row count under the key ""
+    assert wh.manifest("t", snapshot_id=s1)["added_rows"] == {"": 2}
+    assert wh.manifest("t")["added_rows"] == {"": 1}
 
 
 def test_dynamic_partition_overwrite_and_travel(spark, wh):
@@ -42,6 +45,10 @@ def test_dynamic_partition_overwrite_and_travel(spark, wh):
     m = wh.manifest("t")
     assert m["partitions"]["part_id=1"] == [s2]
     assert m["partitions"]["part_id=0"] == [s1]
+    # added_rows counts only the partitions this commit wrote
+    assert m["added_rows"] == {"part_id=1": 1}
+    assert wh.manifest("t", snapshot_id=s1)["added_rows"] == \
+        {"part_id=0": 1, "part_id=1": 1, "part_id=2": 1}
 
 
 def test_append_mode_accumulates(spark, wh):
@@ -82,12 +89,24 @@ def test_expire_snapshots_drops_history_keeps_current(spark, wh):
         wh.read_table("t", snapshot_id=s1)
 
 
+def test_bucketed_write_sums_added_rows_over_bucket_files(spark, wh):
+    rows = [(i % 3, f"k{i}", i) for i in range(12)]
+    wh.write_table(_df(spark, rows), "t", bucket_by=(4, "k"))
+    data_dir = wh.table_path("t") / "data"
+    assert len(list(data_dir.rglob("*.parquet"))) > 1
+    assert wh.manifest("t")["added_rows"] == {"": 12}
+    wh.write_table(_df(spark, [(0, "x", 99)]), "t", mode="append")
+    assert wh.manifest("t")["added_rows"] == {"": 1}
+    assert wh.read_table("t").count() == 13
+
+
 def test_empty_table_still_readable(spark, wh):
     empty = _df(spark, [(0, "a", 1)]).filter(F.col("v") > 99)
     wh.write_table(empty, "t", partition_by=("part_id",))
     got = wh.read_table("t")
     assert got.count() == 0
     assert set(got.columns) == {"part_id", "k", "v"}
+    assert wh.manifest("t")["added_rows"] == {}
 
 
 def test_compact_refuses_then_carries_lost_partition_dirs(spark, wh):
