@@ -10,27 +10,40 @@ Stage pipeline (SURVEY.md §3.2), driven as one batch job:
 
 Resume contract (north rule: "resumable from checkpoint with
 per-partition lineage + metrics"): the expensive extraction stage is
-checkpointed at url-host-bucket granularity.  A restart anti-joins the
-bucket universe against lineage rows with status='ok' and re-extracts
-only missing buckets; writes are dynamic-partition overwrites, so
-re-running a bucket is idempotent.  Downstream stages are recomputed
-from the (then complete) markdown_docs table — they are global
-(connected components cross every partition boundary) and cheap
+checkpointed at url-host-bucket granularity.  A restart reads the
+buckets with an ok extract row from the lineage directory on the
+driver and re-extracts only the others; writes are dynamic-partition
+overwrites, so re-running a bucket is idempotent.  Downstream stages
+are recomputed from the (then complete) markdown_docs table — they are
+global (connected components cross every partition boundary) and cheap
 relative to extraction.
 
 Every stage commits through ``KgBuildJob._stage``; a lineage row's
 ``n_rows`` is the row count the stage's write committed (the snapshot
 manifest's ``added_rows``), never a re-scan of the table.
+
+Lineage is bookkeeping, not data: each append is one parquet file the
+driver writes with pyarrow, under a hidden ``.part-<uuid>.parquet.tmp``
+name that is then renamed to ``part-<uuid>.parquet``, so a reader sees
+all of a call's rows or none, and no append runs a Spark job.  Spark
+and pyarrow both skip hidden names, so a crash mid-append leaves
+nothing readable behind.
 """
 
 from __future__ import annotations
 
 import datetime
+import os
 import time
+import uuid
 from typing import Callable, Optional, Sequence
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -57,6 +70,8 @@ LINEAGE_SCHEMA = StructType([
     StructField("wall_ms", LongType(), False),
     StructField("ts", TimestampType(), False),
 ])
+# ts is timestamp[us, tz=UTC], which Spark reads as TimestampType
+LINEAGE_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
 
 GLOBAL_PART = -1  # lineage part_id for non-bucketed (global) stages
 
@@ -92,12 +107,34 @@ class KgBuildJob:
 
     # -- lineage -----------------------------------------------------------
     def _append_lineage(self, run_id: str, stage: str, rows: list) -> None:
-        """Append one lineage row per (part_id, n_rows, wall_ms)."""
-        now = datetime.datetime.now()
-        df = self.spark.createDataFrame(
-            [(run_id, int(pid), stage, "ok", int(n), wall_ms, now)
-             for pid, n, wall_ms in rows], LINEAGE_SCHEMA)
-        df.write.mode("append").parquet(str(self.wh.table_path("lineage")))
+        """Append one lineage row per (part_id, n_rows, wall_ms) as one
+        parquet file, written hidden and renamed into place."""
+        now = datetime.datetime.now(datetime.timezone.utc)
+        table = pa.Table.from_pylist(
+            [{"run_id": run_id, "part_id": int(pid), "stage": stage,
+              "status": "ok", "n_rows": int(n), "wall_ms": int(wall_ms),
+              "ts": now} for pid, n, wall_ms in rows],
+            schema=LINEAGE_ARROW_SCHEMA)
+        lineage = self.wh.table_path("lineage")
+        lineage.mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = lineage / f".{name}.tmp"
+        pq.write_table(table, tmp)
+        os.replace(tmp, lineage / name)
+
+    def _done_buckets(self, stage: str) -> list:
+        """part_ids with an ok ``stage`` lineage row, read on the
+        driver from the lineage files' part_id/stage/status columns."""
+        lineage = self.wh.table_path("lineage")
+        if not lineage.exists():
+            return []
+        # the declared schema also reads a directory whose only file is
+        # a crashed first append's hidden temp file (nothing to infer)
+        done = pq.read_table(lineage, schema=LINEAGE_ARROW_SCHEMA,
+                             columns=["part_id"],
+                             filters=[("stage", "==", stage),
+                                      ("status", "==", "ok")])
+        return sorted(set(done.column("part_id").to_pylist()))
 
     def _stage(self, run_id: str, stage: str, build: Callable[[], dict],
                partition_by: Sequence[str] = ("part_id",)) -> dict:
@@ -135,13 +172,9 @@ class KgBuildJob:
         bucket is left.  Returns the markdown_docs table."""
         todo = with_part_id(pages, self.n_buckets)
         if resume:
-            lineage = self.wh.table_path("lineage")
-            if lineage.exists():
-                done = (self.spark.read.parquet(str(lineage))
-                        .filter((F.col("stage") == "extract")
-                                & (F.col("status") == "ok"))
-                        .select("part_id").distinct())
-                todo = todo.join(done, "part_id", "left_anti")
+            done = self._done_buckets("extract")
+            if done:
+                todo = todo.filter(~F.col("part_id").isin(done))
             if todo.limit(1).count() == 0:
                 return self.wh.read_table("markdown_docs")
 
@@ -217,6 +250,10 @@ class KgBuildJob:
 
         self._stage(run_id, "graph", graph, partition_by=())
 
-        return {name: self.wh.read_table(name) for name in (
+        tables = {name: self.wh.read_table(name) for name in (
             "markdown_docs", "mentions", "triples", "entity_links",
-            "canonical_map", "kg_nodes", "kg_edges", "lineage")}
+            "canonical_map", "kg_nodes", "kg_edges")}
+        # the declared schema spares Spark a schema-inference job
+        tables["lineage"] = (self.spark.read.schema(LINEAGE_SCHEMA)
+                             .parquet(str(self.wh.table_path("lineage"))))
+        return tables

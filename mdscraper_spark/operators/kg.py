@@ -19,9 +19,10 @@ Scale notes:
 * canonicalization is size-gated (AQE-style): the distinct co-reference
   graph is a vocabulary graph, far smaller than the corpus — a driver
   union-find solves it in one collect when it fits; otherwise
-  hash-partitioned min-label propagation with exact changed-label
-  convergence probes (Observation metrics riding each round's action)
-  and localCheckpoint lineage cuts (SURVEY.md §4.3).
+  hash-partitioned min-label propagation whose every round is one
+  eager localCheckpoint: that one action fills the round's exact
+  changed-label probe (Observation metrics) and materializes its
+  labels, so no later round re-executes it (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -381,7 +382,6 @@ def _local_union_find(pairs) -> list:
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25,
-                         checkpoint_every: int = 3,
                          local_solve_threshold: int = 2_000_000,
                          on_round=None) -> DataFrame:
     """canonical_map(node_id, canon_id): canon is the component min.
@@ -400,9 +400,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
       non-increasing, so the per-round probe counts labels that
       strictly DECREASED this round via ``Observation`` metrics riding
       the round's one action — an exact changed-label count at zero
-      extra passes (n_changed == 0 is the fixpoint).  localCheckpoint
-      every few rounds cuts the lineage chain that otherwise grows
-      linearly with iterations.
+      extra passes (n_changed == 0 is the fixpoint).  That action is
+      the round's eager localCheckpoint: it materializes the round's
+      labels, so the lineage chain never grows past one round and
+      neither the next round nor the returned map recomputes it.
 
     ``on_round(round_idx, n_changed, n_nodes)`` (optional) fires after
     every distributed round — jobs persist these into their lineage
@@ -474,17 +475,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             F.coalesce(F.sum((F.col("label") < F.col("old_label"))
                              .cast("long")), F.lit(0)).alias("n_changed"),
             F.count(F.lit(1)).alias("n_nodes"))
-        labels = observed.select("node_id", "label")
-        # ONE action per round.  On checkpoint rounds the (eager)
-        # localCheckpoint IS that action — it executes the plan once,
-        # fills obs, and materializes the result; running count()
-        # first and checkpointing after would execute the round's
-        # join+agg (plus up to checkpoint_every rounds of uncut
-        # lineage) twice.
-        if (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint()
-        else:
-            labels.count()  # fills obs
+        # ONE action per round: the eager localCheckpoint executes the
+        # round's join+agg once, fills obs, and materializes the labels
+        # the next round (or the caller) reads
+        labels = observed.select("node_id", "label").localCheckpoint()
         n_changed = obs.get["n_changed"]
         if on_round is not None:
             on_round(i, int(n_changed), int(obs.get["n_nodes"]))
@@ -501,10 +495,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             f"connected_components did not converge within {max_iter} "
             "iterations (a component's diameter exceeds the round "
             "budget); raise max_iter")
-    # materialize the fixpoint so downstream consumers don't replay the
-    # remaining iterations' lineage
-    return (labels.select(F.col("node_id"), F.col("label").alias("canon_id"))
-            .localCheckpoint())
+    # the fixpoint round's checkpoint is already materialized
+    return labels.select(F.col("node_id"), F.col("label").alias("canon_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -638,15 +630,22 @@ def build_kg_edges_with_time_windows(triples: DataFrame,
     column already on the pages/markdown_docs table and the join
     disappears (carry warc_ts through extraction); the join form
     exists because mine_triples' Arrow schema is deliberately minimal.
-    Join key is url, the same distribution as the triples themselves —
-    one hash join under AQE, then the min/max aggregates ride the SAME
-    single groupBy shuffle as the flagship edge build."""
+    ``page_times`` is first reduced to one (url, min, max) row per url
+    and then LEFT-joined on url, the same distribution as the triples
+    themselves: a url listed twice cannot multiply support, and a
+    triple whose url is absent keeps its support with a null window —
+    ``n_support`` always equals build_kg_edges'.  The min/max
+    aggregates ride the SAME single groupBy shuffle as the flagship
+    edge build."""
+    windows = (page_times.groupBy("url")
+               .agg(F.min("warc_ts").alias("first_ts"),
+                    F.max("warc_ts").alias("last_ts")))
     t = _canonicalized_triples(triples, canonical_map) \
-        .join(page_times, "url")
+        .join(windows, "url", "left")
     return (t.groupBy("src", "pred", "dst")
             .agg(F.count(F.lit(1)).alias("n_support"),
-                 F.min("warc_ts").alias("first_seen"),
-                 F.max("warc_ts").alias("last_seen")))
+                 F.min("first_ts").alias("first_seen"),
+                 F.max("last_ts").alias("last_seen")))
 
 
 def build_kg_edges_from_support(support: DataFrame,

@@ -4,8 +4,16 @@ replay of the census -> threshold -> scrub-all -> positional rebuild."""
 
 import math
 import random
+import re
 
 from mdscraper_spark.operators.dedup import host_boilerplate_scrub
+
+
+def _ws_strip(para):
+    """ws_strip's twin: Java regex ``\\s`` is ASCII-only, so NBSP and
+    other Unicode spaces are content, not whitespace (``str.strip()``
+    would strip them)."""
+    return re.sub(r"^\s+|\s+$", "", para, flags=re.ASCII)
 
 
 def _py_replay(rows, min_frac=0.5, min_docs=3):
@@ -19,7 +27,7 @@ def _py_replay(rows, min_frac=0.5, min_docs=3):
         h = host if host is not None else ""
         host_docs.setdefault(h, set()).add(doc_id)
         for para in (text or "").split("\n"):
-            if para.strip() != "":
+            if _ws_strip(para) != "":
                 line_docs.setdefault((h, para), set()).add(doc_id)
     template = set()
     for (h, para), docs in line_docs.items():
@@ -31,7 +39,7 @@ def _py_replay(rows, min_frac=0.5, min_docs=3):
         h = host if host is not None else ""
         kept, removed = [], 0
         for para in (text or "").split("\n"):
-            if para.strip() != "" and (h, para) in template:
+            if _ws_strip(para) != "" and (h, para) in template:
                 removed += 1
             else:
                 kept.append(para)
@@ -73,3 +81,19 @@ def test_host_boilerplate_differential_fuzz(spark):
         got = {r.doc_id: (r.clean_text, r.n_removed)
                for r in host_boilerplate_scrub(d).collect()}
         assert got == expect
+
+
+def test_nbsp_only_line_is_template_content(spark):
+    """A line of only NBSP is not whitespace to ws_strip (Java ``\\s``
+    is ASCII), so repeated across a host's docs it is template and is
+    scrubbed; an ASCII whitespace-only line in the same docs is
+    structure and is kept."""
+    nbsp, ascii_ws = "\u00a0", " \t"
+    docs = [(i, "nbsp.test", f"{nbsp}\nbody {i}\n{ascii_ws}")
+            for i in range(4)]
+    expect = {i: (f"body {i}\n{ascii_ws}", 1) for i in range(4)}
+    assert _py_replay(docs) == expect
+    df = spark.createDataFrame(docs, "doc_id long, source string, text string")
+    got = {r.doc_id: (r.clean_text, r.n_removed)
+           for r in host_boilerplate_scrub(df).collect()}
+    assert got == expect

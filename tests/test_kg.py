@@ -284,7 +284,9 @@ def test_edge_provenance_counts_and_url_span(spark):
 def test_edge_time_windows(spark):
     """Round 5 (J61): build_kg_edges_with_time_windows aggregates the
     min/max supporting-page timestamp per canonical edge; support
-    counts agree with the flagship edge build."""
+    counts agree with the flagship edge build even when a url is
+    missing from page_times (null window, support kept) or listed
+    twice (support not multiplied)."""
     import datetime
 
     from mdscraper_spark.operators.kg import (
@@ -293,24 +295,35 @@ def test_edge_time_windows(spark):
     triples = spark.createDataFrame(
         [("https://d.test/2", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
          ("https://d.test/1", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
-         ("https://d.test/3", 0, "Ada Lovelace", "born_in", "London", 0.8)],
+         ("https://d.test/3", 0, "Ada Lovelace", "born_in", "London", 0.8),
+         # d.test/4 has no page_times row
+         ("https://d.test/4", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
+         ("https://d.test/4", 1, "Grace Hopper", "born_in", "New York", 0.8)],
         "url string, sent_id int, subj string, pred string, obj string, "
         "conf double")
     cmap = spark.createDataFrame([("s:ada lovelace", "e:1")],
                                  "node_id string, canon_id string")
     t0 = datetime.datetime(2025, 6, 14, 0, 0, 0)
+    hour = datetime.timedelta(hours=1)
+    # d.test/3 is listed twice (two crawls of the same page)
     times = spark.createDataFrame(
-        [(f"https://d.test/{i}", t0 + datetime.timedelta(hours=i))
-         for i in (1, 2, 3)], "url string, warc_ts timestamp")
+        [(f"https://d.test/{i}", t0 + i * hour) for i in (1, 2, 3)]
+        + [("https://d.test/3", t0 + 7 * hour)],
+        "url string, warc_ts timestamp")
     rows = {(r.src, r.pred, r.dst): r for r in
             build_kg_edges_with_time_windows(triples, cmap, times).collect()}
     works = rows[("e:1", "works_for", "s:acme")]
-    # window spans the supporting pages only (doc 3 supports born_in)
-    assert works.n_support == 2
-    assert works.first_seen == t0 + datetime.timedelta(hours=1)
-    assert works.last_seen == t0 + datetime.timedelta(hours=2)
+    # window spans the supporting pages only (doc 3 supports born_in);
+    # the timeless doc 4 still counts as support
+    assert works.n_support == 3
+    assert works.first_seen == t0 + hour
+    assert works.last_seen == t0 + 2 * hour
     born = rows[("e:1", "born_in", "s:london")]
-    assert born.first_seen == born.last_seen == t0 + datetime.timedelta(hours=3)
+    assert born.n_support == 1
+    assert (born.first_seen, born.last_seen) == (t0 + 3 * hour, t0 + 7 * hour)
+    hopper = rows[("s:grace hopper", "born_in", "s:new york")]
+    assert hopper.n_support == 1
+    assert hopper.first_seen is None and hopper.last_seen is None
     flag = {(r.src, r.pred, r.dst): r.n_support
             for r in build_kg_edges(triples, cmap).collect()}
     assert {k: v.n_support for k, v in rows.items()} == flag
@@ -335,6 +348,27 @@ def test_cc_on_round_telemetry_chain(spark):
     # strictly more informative than a bare converged/not bit
     changed = [ch for _i, ch, _n in rounds]
     assert changed == sorted(changed, reverse=True)
+
+
+def test_cc_rounds_are_one_action_each(spark, count_jobs):
+    """Distributed CC on 4- and 12-hop paths equals the driver
+    union-find, and each extra round costs a bounded number of Spark
+    jobs: a round's checkpoint materializes it, so no later round or
+    final step re-executes it."""
+    cost = {}
+    for hops in (4, 12):
+        pairs = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(hops)]
+        edges = spark.createDataFrame(pairs, "src string, dst string")
+        rounds = []
+        cmap, n_jobs = count_jobs(lambda: kg_ops.connected_components(
+            edges, local_solve_threshold=0,
+            on_round=lambda i, _ch, _nn: rounds.append(i)))
+        assert sorted(map(tuple, cmap.collect())) == \
+            kg_ops._local_union_find(pairs)
+        cost[hops] = (len(rounds), n_jobs)
+    (r4, j4), (r12, j12) = cost[4], cost[12]
+    assert r12 > r4
+    assert j12 - j4 <= 6 * (r12 - r4), cost
 
 
 def test_cc_local_path_never_calls_on_round(spark):
